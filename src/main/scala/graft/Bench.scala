@@ -1,42 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  /** One-line JSON string escape (the artifact must stay a single line
-    * even when an error message carries quotes or newlines).
-    */
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify/SparkSpecBase: the events TIMESTAMP_NTZ→TIMESTAMP
-      // normalization (Tables.normalizeTs) is value-identity only in UTC
-      .config("spark.sql.session.timeZone", "UTC")
-      // FileOutputCommitter v2 (public MR/Spark setting): task commits
-      // rename straight to the destination instead of through the job-
-      // commit's single-threaded driver merge. The many-partition fan-out
-      // writes (a23's ~240 day×bucket dirs) otherwise serialize their
-      // commit on the driver; v2's tradeoff (partial task output visible
-      // on job failure) is irrelevant for these scratch-dir stagings and
-      // the standard choice for HDFS-like stores (object stores use
-      // dedicated committers instead).
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // JVM/codegen warmup outside the timed region: the first query
     // otherwise absorbs ~3-5s of one-time session cost into its number.
     // The warmup is ALSO timed and emitted as `warmup_calib_sec` — a
@@ -51,19 +17,11 @@ object Bench {
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
     SparkEntry.entry(spark).count()
     val warmupCalib = (System.nanoTime() - warmT0) / 1e9
-    // Local-profiling filter: SPARK_GRAFT_ONLY=q1,q2 limits the run to
-    // the named queries. Unset (the driver's invocation) runs everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
     // Deterministic name order: Map iteration order is effectively
     // arbitrary and changes as queries are added, which re-assigns the
     // per-plan codegen warmup to different queries each round and makes
     // per-query numbers non-comparable across bench artifacts.
-    val ordered = selected.toSeq.sortBy(_._1)
+    val ordered = SparkEntry.selected.toSeq.sortBy(_._1)
     // SPARK_GRAFT_REPS (r3 advice: one loaded machine produced a
     // misleading single-pass artifact) re-runs the whole sequence and
     // reports the per-query MIN — the contention-resistant number — next
@@ -109,15 +67,15 @@ object Bench {
       n -> (if (oks.nonEmpty) oks.min else -1.0)
     }
     def jmap(kvs: Seq[(String, String)]): String =
-      kvs.map { case (k, v) => "\"" + esc(k) + "\":" + v }
+      kvs.map { case (k, v) => Json.str(k) + ":" + v }
         .mkString("{", ",", "}")
     val qs = jmap(minPer.map { case (k, v) => k -> v.toString })
     val firstQs = jmap(passes.head.map { case (n, t, _) => n -> t.toString })
     val errJson = jmap(errors.toSeq.map { case (k, v) =>
-      k -> ("\"" + esc(v) + "\"") })
+      k -> Json.str(v) })
     val total = passes.head.map(_._2).sum
     val sumOfMin = minPer.map(_._2).filter(_ >= 0).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_first_pass":$firstQs,"sum_of_min":$sumOfMin,"reps":$reps,"warmup_calib_sec":$warmupCalib,"errors":$errJson,"sf":"${esc(sfDir)}"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_first_pass":$firstQs,"sum_of_min":$sumOfMin,"reps":$reps,"warmup_calib_sec":$warmupCalib,"errors":$errJson,"sf":${Json.str(sfDir)}}""")
     // Compact summary, printed LAST (r8 verdict #3): the driver records
     // only a bounded TAIL of stdout, and the full line above has grown
     // past it — two rounds in a row the leading total/sum_of_min fields
@@ -136,7 +94,7 @@ object Bench {
       minPer.filter(_._2 >= 0).toMap, band)
     val regressJson = jmap(regress.toSeq.sortBy(_._1).map {
       case (k, (fr, b)) => k -> f"""{"min":$fr%.3f,"band":$b%.3f}""" })
-    println(s"""{"metric":"summary","sum_of_min":$sumOfMin,"total":$total,"n_queries":${minPer.size},"n_errors":${errors.size},"warmup_calib_sec":${f"$warmupCalib%.3f"},"band_regressions":$regressJson,"top10_min":${jmap(top10.map { case (k, v) => k -> f"$v%.3f" })},"sf":"${esc(sfDir)}"}""")
+    println(s"""{"metric":"summary","sum_of_min":$sumOfMin,"total":$total,"n_queries":${minPer.size},"n_errors":${errors.size},"warmup_calib_sec":${f"$warmupCalib%.3f"},"band_regressions":$regressJson,"top10_min":${jmap(top10.map { case (k, v) => k -> f"$v%.3f" })},"sf":${Json.str(sfDir)}}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

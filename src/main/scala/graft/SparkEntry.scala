@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{queries => q, streaming => st}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -18,84 +19,46 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     _root_.graft.queries.Relational.q2RevenueByNation(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2 plus the
-    * training-data extensions (dedup, similarity, text analysis,
-    * enrichment, event-time windows). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    _root_.graft.queries.Relational.defs ++
-      _root_.graft.queries.Joins.defs ++
-      _root_.graft.queries.Functions.defs ++
-      _root_.graft.queries.Scalars.defs ++
-      _root_.graft.queries.Normalize.defs ++
-      _root_.graft.queries.Incremental.defs ++
-      _root_.graft.queries.Ingest.defs ++
-      _root_.graft.queries.Curation.defs ++
-      _root_.graft.queries.Dedup.defs ++
-      _root_.graft.queries.Similarity.defs ++
-      _root_.graft.queries.TextAnalysis.defs ++
-      _root_.graft.queries.Enrich.defs ++
-      _root_.graft.queries.Multimodal.defs ++
-      _root_.graft.queries.Sketches.defs ++
-      _root_.graft.queries.Layout.defs ++
-      _root_.graft.queries.Warehouse.defs ++
-      _root_.graft.queries.WarehouseDeletes.defs ++
-      _root_.graft.queries.WarehouseSafety.defs ++
-      _root_.graft.queries.RowTracking.defs ++
-      _root_.graft.queries.EndToEnd.defs ++
-      _root_.graft.streaming.EventWindows.defs ++
-      _root_.graft.streaming.Sessionize.defs ++
-      _root_.graft.streaming.IntervalJoin.defs ++
-      _root_.graft.streaming.StreamDedup.defs ++
-      _root_.graft.streaming.StreamNearDup.defs ++
-      _root_.graft.streaming.StreamDecontam.defs ++
-      _root_.graft.streaming.StreamQuality.defs ++
-      _root_.graft.streaming.StreamDsir.defs ++
-      _root_.graft.streaming.CdcMerge.defs ++
-      _root_.graft.streaming.CasSink.defs ++
-      _root_.graft.streaming.CdfStream.defs ++
-      _root_.graft.streaming.DvFeedStream.defs ++
-      _root_.graft.streaming.FeedRetention.defs ++
-      _root_.graft.streaming.CdcEqDelete.defs ++
-      _root_.graft.streaming.GapDetect.defs ++
-      _root_.graft.streaming.FunnelDetect.defs
+  /** Every registered query, each module named once: SURVEY.md §2's
+    * operator families plus the training-data extensions (dedup,
+    * similarity, text analysis, enrichment, event-time windows, the
+    * warehouse table format, streaming). Names are unique. */
+  private lazy val registry: Map[String, QueryDef] = QueryDef.byName(Seq(
+    q.Relational.queries, q.Joins.queries, q.Functions.queries,
+    q.Scalars.queries, q.Normalize.queries, q.Incremental.queries,
+    q.Ingest.queries, q.Curation.queries, q.Dedup.queries,
+    q.Similarity.queries, q.TextAnalysis.queries, q.Enrich.queries,
+    q.Multimodal.queries, q.Sketches.queries, q.Layout.queries,
+    q.Warehouse.queries, q.WarehouseDeletes.queries,
+    q.WarehouseSafety.queries, q.RowTracking.queries, q.EndToEnd.queries,
+    st.EventWindows.queries, st.Sessionize.queries, st.IntervalJoin.queries,
+    st.StreamDedup.queries, st.StreamNearDup.queries,
+    st.StreamDecontam.queries, st.StreamQuality.queries,
+    st.StreamDsir.queries, st.CdcMerge.queries, st.CasSink.queries,
+    st.CdfStream.queries, st.DvFeedStream.queries, st.FeedRetention.queries,
+    st.CdcEqDelete.queries, st.GapDetect.queries, st.FunnelDetect.queries,
+  ).flatten)
+
+  private lazy val runs: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, d) => n -> d.run }
+
+  private lazy val oracles: Map[String, String] =
+    registry.map { case (n, d) => n -> d.oracleSql }
+
+  /** Name → Spark implementation, for every registered query. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = runs
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    _root_.graft.queries.Relational.oracle ++
-      _root_.graft.queries.Joins.oracle ++
-      _root_.graft.queries.Functions.oracle ++
-      _root_.graft.queries.Scalars.oracle ++
-      _root_.graft.queries.Normalize.oracle ++
-      _root_.graft.queries.Incremental.oracle ++
-      _root_.graft.queries.Ingest.oracle ++
-      _root_.graft.queries.Curation.oracle ++
-      _root_.graft.queries.Dedup.oracle ++
-      _root_.graft.queries.Similarity.oracle ++
-      _root_.graft.queries.TextAnalysis.oracle ++
-      _root_.graft.queries.Enrich.oracle ++
-      _root_.graft.queries.Multimodal.oracle ++
-      _root_.graft.queries.Sketches.oracle ++
-      _root_.graft.queries.Layout.oracle ++
-      _root_.graft.queries.Warehouse.oracle ++
-      _root_.graft.queries.WarehouseDeletes.oracle ++
-      _root_.graft.queries.WarehouseSafety.oracle ++
-      _root_.graft.queries.RowTracking.oracle ++
-      _root_.graft.queries.EndToEnd.oracle ++
-      _root_.graft.streaming.EventWindows.oracle ++
-      _root_.graft.streaming.Sessionize.oracle ++
-      _root_.graft.streaming.IntervalJoin.oracle ++
-      _root_.graft.streaming.StreamDedup.oracle ++
-      _root_.graft.streaming.StreamNearDup.oracle ++
-      _root_.graft.streaming.StreamDecontam.oracle ++
-      _root_.graft.streaming.StreamQuality.oracle ++
-      _root_.graft.streaming.StreamDsir.oracle ++
-      _root_.graft.streaming.CdcMerge.oracle ++
-      _root_.graft.streaming.CasSink.oracle ++
-      _root_.graft.streaming.CdfStream.oracle ++
-      _root_.graft.streaming.DvFeedStream.oracle ++
-      _root_.graft.streaming.FeedRetention.oracle ++
-      _root_.graft.streaming.CdcEqDelete.oracle ++
-      _root_.graft.streaming.GapDetect.oracle ++
-      _root_.graft.streaming.FunnelDetect.oracle
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = oracles
+
+  /** The queries a local run covers: `SPARK_GRAFT_ONLY=q1,q2` names a
+    * comma-separated subset; unset, every query runs. */
+  private[graft] def selected: Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY") match {
+      case Some(only) =>
+        val names = only.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        queries.filter { case (n, _) => names(n) }
+      case None => queries
+    }
 }

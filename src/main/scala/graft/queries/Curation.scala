@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** The end-to-end curation decision — the query a training-data pipeline
   * actually ships: per document, the composed verdict of exact dedup
@@ -1490,39 +1491,21 @@ object Curation {
       |  FROM (${Dedup.d6CoreSql}) cl)
       |ORDER BY doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c14_leakage_safe_split" -> c14LeakageSafeSplit,
-    "c9_dedup_weighted_sample" -> c9DedupWeightedSample,
-    "c8_domain_pagerank" -> c8DomainPagerank,
-    "c10_temperature_mix" -> c10TemperatureMix,
-    "c7_relative_gate" -> c7RelativeGate,
-    "c1_curation_decision" -> c1CurationDecision,
-    "c1b_curation_dupinject" -> c1DupInject,
-    "c2_train_split" -> c2TrainSplit,
-    "c3_sequence_pack" -> c3SequencePack,
-    "c4_decontaminate" -> c4Decontaminate,
-    "c11_substring_decontam" -> c11SubstringDecontam,
-    "c12_contamination_report" -> c12ContaminationReport,
-    "c13_dsir_selection" -> c13DsirSelection,
-    "c5_stratified_sample" -> c5StratifiedSample,
-    "c6_domain_mix" -> c6DomainMix,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "c14_leakage_safe_split" -> c14Sql,
-    "c10_temperature_mix" -> c10Sql,
-    "c9_dedup_weighted_sample" -> c9Sql,
-    "c8_domain_pagerank" -> c8Sql,
-    "c7_relative_gate" -> c7Sql,
-    "c1_curation_decision" -> c1Sql,
-    "c1b_curation_dupinject" -> c1DupSql,
-    "c2_train_split" -> c2Sql,
-    "c3_sequence_pack" -> c3Sql,
-    "c4_decontaminate" -> c4Sql,
-    "c11_substring_decontam" -> c11Sql,
-    "c12_contamination_report" -> c12Sql,
-    "c13_dsir_selection" -> c13Sql,
-    "c5_stratified_sample" -> c5Sql,
-    "c6_domain_mix" -> c6Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("c14_leakage_safe_split", c14LeakageSafeSplit, c14Sql),
+    QueryDef("c9_dedup_weighted_sample", c9DedupWeightedSample, c9Sql),
+    QueryDef("c8_domain_pagerank", c8DomainPagerank, c8Sql),
+    QueryDef("c10_temperature_mix", c10TemperatureMix, c10Sql),
+    QueryDef("c7_relative_gate", c7RelativeGate, c7Sql),
+    QueryDef("c1_curation_decision", c1CurationDecision, c1Sql),
+    QueryDef("c1b_curation_dupinject", c1DupInject, c1DupSql),
+    QueryDef("c2_train_split", c2TrainSplit, c2Sql),
+    QueryDef("c3_sequence_pack", c3SequencePack, c3Sql),
+    QueryDef("c4_decontaminate", c4Decontaminate, c4Sql),
+    QueryDef("c11_substring_decontam", c11SubstringDecontam, c11Sql),
+    QueryDef("c12_contamination_report", c12ContaminationReport, c12Sql),
+    QueryDef("c13_dsir_selection", c13DsirSelection, c13Sql),
+    QueryDef("c5_stratified_sample", c5StratifiedSample, c5Sql),
+    QueryDef("c6_domain_mix", c6DomainMix, c6Sql),
   )
 }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import OracleSql.{dot, uq}
+import graft.QueryDef
 
 /** Large-scale deduplication operators over the `documents` table — the
   * LLM-training-data extension surface (builder brief; SURVEY.md §7.3 #8).
@@ -2024,7 +2026,7 @@ object Dedup {
       |  SELECT vec_id, cent_id AS cell FROM (
       |    SELECT e.vec_id, c.cent_id,
       |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${Similarity.cosineSql("e.embedding", "c.ce")} DESC,
+      |        ORDER BY ${OracleSql.cos("e.embedding", "c.ce")} DESC,
       |          c.cent_id) AS rn
       |    FROM e CROSS JOIN cent0 c) t
       |  WHERE rn = 1),
@@ -2044,13 +2046,13 @@ object Dedup {
       |  SELECT vec_id, cent_id AS cell FROM (
       |    SELECT e.vec_id, c.cent_id,
       |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${Similarity.cosineSql("e.embedding", "c.ce")} DESC,
+      |        ORDER BY ${OracleSql.cos("e.embedding", "c.ce")} DESC,
       |          c.cent_id) AS rn
       |    FROM e CROSS JOIN cent1 c) t
       |  WHERE rn = 1)""".stripMargin
 
   val d12Sql: String = {
-    val cos = Similarity.cosineSql("a.embedding", "b.embedding")
+    val cos = OracleSql.cos("a.embedding", "b.embedding")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
       |$d12QuantizerSql,
       |cells AS (
@@ -2112,17 +2114,15 @@ object Dedup {
     // lesson)
     val cb = pqRefit(subs, pqAssign(subs, seed)).localCheckpoint()
     val codes = pqAssign(subs, cb)
-    def uqS(x: String) =
-      s"CAST(floor(CAST($x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
     val csq = cb.select(col("sub"), col("code"),
-      expr(s"aggregate(transform(cw, y -> ${uqS("y")} * ${uqS("y")}), " +
+      expr(s"aggregate(transform(cw, y -> ${uq("y")} * ${uq("y")}), " +
         "CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("cwsq_u"))
     val ctab = cb.select(col("sub"), col("code").as("code_a"),
         col("cw").as("cwa"))
       .join(cb.select(col("sub"), col("code").as("code_b"),
         col("cw").as("cwb")), Seq("sub"))
       .select(col("sub"), col("code_a"), col("code_b"),
-        expr(s"aggregate(zip_with(cwa, cwb, (x, y) -> ${uqS("x")} * ${uqS("y")}), " +
+        expr(s"aggregate(zip_with(cwa, cwb, (x, y) -> ${uq("x")} * ${uq("y")}), " +
           "CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("ip_u"))
     val vcode = codes.join(broadcast(csq), Seq("sub", "code"))
       .groupBy(col("vec_id"))
@@ -2169,15 +2169,12 @@ object Dedup {
 
   val d15Sql: String = {
     import Similarity.{pqSubDim, pqKsub, pqM}
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($a)+1)," +
-        s" i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (acc, x) -> acc + x)"
     def uqProd(a: String, b: String) =
       s"""CAST(list_reduce(list_prepend(0, list_transform(range(1, len($a)+1),
         |      i -> CAST(floor($a[i]::DOUBLE * 1000000.0 + 0.5) AS BIGINT)
         |         * CAST(floor($b[i]::DOUBLE * 1000000.0 + 0.5) AS BIGINT))),
         |      (acc, v) -> acc + v) AS BIGINT)""".stripMargin
-    val cosAB = Similarity.cosineSql("ea.embedding", "eb.embedding")
+    val cosAB = OracleSql.cos("ea.embedding", "eb.embedding")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
       |$d12QuantizerSql,
       |subs AS (
@@ -2395,45 +2392,25 @@ object Dedup {
       |FROM pstats16
       |ORDER BY doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d16_paragraph_dedup" -> d16ParagraphDedup,
-    "d13_containment_dedup" -> d13ContainmentDedup,
-    "d14_substring_dedup" -> d14SubstringDedup,
-    "d15_semantic_pq" -> d15SemanticPqDedup,
-    "d12_semantic_dedup" -> d12SemanticDedup,
-    "d11_cluster_representatives" -> d11ClusterRepresentatives,
-    "d1_exact_dedup" -> d1ExactDedup,
-    "d8_incremental_dedup" -> d8IncrementalDedup,
-    "d10_incremental_minhash" -> d10IncrementalMinhash,
-    "d2_ngram_jaccard" -> d2NgramJaccard,
-    "d3_minhash_lsh" -> d3MinhashLsh,
-    "d17_banding_sweep" -> d17BandingSweep,
-    "d4_simhash" -> d4Simhash,
-    "d5_simhash_neardup" -> d5SimhashNearDup,
-    "d6_neardup_clusters" -> d6NeardupClusters,
-    "d7_embedding_neardup" -> d7EmbeddingNearDup,
-    "d9_simhash64_neardup" -> d9Simhash64NearDup,
-    "d18_snapshot_incremental_dedup" -> d18SnapshotIncrementalDedup,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "d18_snapshot_incremental_dedup" -> d18Sql,
-    "d16_paragraph_dedup" -> d16Sql,
-    "d13_containment_dedup" -> d13Sql,
-    "d14_substring_dedup" -> d14Sql,
-    "d15_semantic_pq" -> d15Sql,
-    "d12_semantic_dedup" -> d12Sql,
-    "d11_cluster_representatives" -> d11Sql,
-    "d1_exact_dedup" -> d1Sql,
-    "d8_incremental_dedup" -> d8Sql,
-    "d10_incremental_minhash" -> d10Sql,
-    "d2_ngram_jaccard" -> d2Sql,
-    "d3_minhash_lsh" -> d3Sql,
-    "d17_banding_sweep" -> d17Sql,
-    "d4_simhash" -> d4Sql,
-    "d5_simhash_neardup" -> d5Sql,
-    "d6_neardup_clusters" -> d6Sql,
-    "d7_embedding_neardup" -> d7Sql,
-    "d9_simhash64_neardup" -> d9Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("d16_paragraph_dedup", d16ParagraphDedup, d16Sql),
+    QueryDef("d13_containment_dedup", d13ContainmentDedup, d13Sql),
+    QueryDef("d14_substring_dedup", d14SubstringDedup, d14Sql),
+    QueryDef("d15_semantic_pq", d15SemanticPqDedup, d15Sql),
+    QueryDef("d12_semantic_dedup", d12SemanticDedup, d12Sql),
+    QueryDef("d11_cluster_representatives", d11ClusterRepresentatives, d11Sql),
+    QueryDef("d1_exact_dedup", d1ExactDedup, d1Sql),
+    QueryDef("d8_incremental_dedup", d8IncrementalDedup, d8Sql),
+    QueryDef("d10_incremental_minhash", d10IncrementalMinhash, d10Sql),
+    QueryDef("d2_ngram_jaccard", d2NgramJaccard, d2Sql),
+    QueryDef("d3_minhash_lsh", d3MinhashLsh, d3Sql),
+    QueryDef("d17_banding_sweep", d17BandingSweep, d17Sql),
+    QueryDef("d4_simhash", d4Simhash, d4Sql),
+    QueryDef("d5_simhash_neardup", d5SimhashNearDup, d5Sql),
+    QueryDef("d6_neardup_clusters", d6NeardupClusters, d6Sql),
+    QueryDef("d7_embedding_neardup", d7EmbeddingNearDup, d7Sql),
+    QueryDef("d9_simhash64_neardup", d9Simhash64NearDup, d9Sql),
+    QueryDef("d18_snapshot_incremental_dedup", d18SnapshotIncrementalDedup,
+      d18Sql),
   )
 }

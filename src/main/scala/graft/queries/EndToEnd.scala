@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** The reference's flagship §3.3 DvP lifecycle certified as ONE query
   * (r9 verdict ask #7): every stage is individually oracle-green
@@ -631,19 +632,11 @@ object EndToEnd {
       |  violations
       |FROM v ORDER BY doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e2e_ingest_pipeline" -> e2eIngestPipeline,
-    "e2e_dedup_pipeline" -> e2eDedupPipeline,
-    "e2e_dvp_pipeline" -> e2eDvpPipeline,
-    "e2e_curation_pipeline" -> e2eCurationPipeline,
-    "e2e_warehouse_pipeline" -> e2eWarehousePipeline,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "e2e_ingest_pipeline" -> e2eIngSql,
-    "e2e_dedup_pipeline" -> e2eDedupSql,
-    "e2e_dvp_pipeline" -> e2eSql,
-    "e2e_curation_pipeline" -> e2eCurSql,
-    "e2e_warehouse_pipeline" -> e2eWhSql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("e2e_ingest_pipeline", e2eIngestPipeline, e2eIngSql),
+    QueryDef("e2e_dedup_pipeline", e2eDedupPipeline, e2eDedupSql),
+    QueryDef("e2e_dvp_pipeline", e2eDvpPipeline, e2eSql),
+    QueryDef("e2e_curation_pipeline", e2eCurationPipeline, e2eCurSql),
+    QueryDef("e2e_warehouse_pipeline", e2eWarehousePipeline, e2eWhSql),
   )
 }

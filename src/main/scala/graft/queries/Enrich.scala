@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** Enrichment / reshape operators: the alias-dimension broadcast join
   * (SURVEY J1 + F15/F17), groupBy-pivot reshaping (SURVEY §1.1 #3), and
@@ -599,25 +600,14 @@ object Enrich {
       |GROUP BY s.q_id
       |ORDER BY q_partkey""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e7_blocked_fuzzy_join" -> e7BlockedFuzzyJoin,
-    "e8_fuzzy_join_k2" -> e8FuzzyJoinK2,
-    "e1_alias_canonicalize" -> e1AliasCanonicalize,
-    "e2_pivot_cube" -> e2PivotCube,
-    "e3_json_extract" -> e3JsonExtract,
-    "e4_contains_join" -> e4ContainsJoin,
-    "e5_team_canonicalize" -> e5TeamCanonicalize,
-    "e6_inverted_contains" -> e6InvertedContains,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "e7_blocked_fuzzy_join" -> e7Sql,
-    "e8_fuzzy_join_k2" -> e8Sql,
-    "e1_alias_canonicalize" -> e1Sql,
-    "e2_pivot_cube" -> e2Sql,
-    "e3_json_extract" -> e3Sql,
-    "e4_contains_join" -> e4Sql,
-    "e5_team_canonicalize" -> e5Sql,
-    "e6_inverted_contains" -> e6Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("e7_blocked_fuzzy_join", e7BlockedFuzzyJoin, e7Sql),
+    QueryDef("e8_fuzzy_join_k2", e8FuzzyJoinK2, e8Sql),
+    QueryDef("e1_alias_canonicalize", e1AliasCanonicalize, e1Sql),
+    QueryDef("e2_pivot_cube", e2PivotCube, e2Sql),
+    QueryDef("e3_json_extract", e3JsonExtract, e3Sql),
+    QueryDef("e4_contains_join", e4ContainsJoin, e4Sql),
+    QueryDef("e5_team_canonicalize", e5TeamCanonicalize, e5Sql),
+    QueryDef("e6_inverted_contains", e6InvertedContains, e6Sql),
   )
 }

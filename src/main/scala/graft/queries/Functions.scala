@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.clean.Clean
 import graft.extract.Extract
+import graft.QueryDef
 
 /** Scalar-function operator queries (SURVEY F1, F5-F7): the
   * data-dependent coercion decision emitted as data, and the multi-field
@@ -254,17 +255,10 @@ object Functions {
       |  END AS analysis_prompt
       |FROM p ORDER BY o_orderkey""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "f1_guarded_coercion" -> f1GuardedCoercion,
-    "f5_prop_line_parse" -> f5PropLineParse,
-    "f10_insight_parse" -> f10InsightParse,
-    "f23_llm_envelope" -> f23LlmEnvelope,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "f1_guarded_coercion" -> f1Sql,
-    "f5_prop_line_parse" -> f5Sql,
-    "f10_insight_parse" -> f10Sql,
-    "f23_llm_envelope" -> f23Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("f1_guarded_coercion", f1GuardedCoercion, f1Sql),
+    QueryDef("f5_prop_line_parse", f5PropLineParse, f5Sql),
+    QueryDef("f10_insight_parse", f10InsightParse, f10Sql),
+    QueryDef("f23_llm_envelope", f23LlmEnvelope, f23Sql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.sink.{Compact, Sinks}
+import graft.QueryDef
 
 /** S13 incremental skip-if-exists as an oracle-comparable decision table
   * (`get_basketball_stats_all_teams_Version6.py:219-222`): which
@@ -291,17 +292,10 @@ object Incremental {
       |  count(*) OVER (PARTITION BY source) AS n_in_dir
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s13_skip_existing" -> s13SkipExisting,
-    "s9_partitioned_roundtrip" -> s9PartitionedRoundtrip,
-    "a1_fanout_layout" -> a1FanoutLayout,
-    "a13_compact" -> a13Compact,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "s13_skip_existing" -> s13Sql,
-    "s9_partitioned_roundtrip" -> s9Sql,
-    "a1_fanout_layout" -> a1Sql,
-    "a13_compact" -> a13Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("s13_skip_existing", s13SkipExisting, s13Sql),
+    QueryDef("s9_partitioned_roundtrip", s9PartitionedRoundtrip, s9Sql),
+    QueryDef("a1_fanout_layout", a1FanoutLayout, a1Sql),
+    QueryDef("a13_compact", a13Compact, a13Sql),
   )
 }

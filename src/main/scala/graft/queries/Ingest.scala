@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.ingest.Readers
 import graft.sink.Sinks
+import graft.QueryDef
 
 /** Source/sink rows S5, S11, S12 under the oracle (extending the
   * s13/s9 pattern of exercising REAL file I/O inside a hash-compared
@@ -489,8 +490,8 @@ object Ingest {
   }
 
   /** The supplied read schema (no inference scan) with the explicit
-    * corrupt-record column — shared with `DumpPlans`' parse-plan dump. */
-  private[graft] val i10Schema = org.apache.spark.sql.types.StructType(Seq(
+    * corrupt-record column. */
+  private val i10Schema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_id",
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("lang",
@@ -617,33 +618,18 @@ object Ingest {
       |    AS status
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "i11_nested_flatten" -> i11NestedFlatten,
-    "i10_jsonl_quarantine" -> i10JsonlQuarantine,
-    "i9_schema_evolution" -> i9SchemaEvolution,
-    "s5_csv_scan" -> s5CsvScan,
-    "i8_html_page_prune" -> i8HtmlPagePrune,
-    "p11_table_size_gate" -> p11TableSizeGate,
-    "s11_run_summary" -> s11RunSummary,
-    "s12_csv_to_json" -> s12CsvToJson,
-    "i1_raw_table_scan" -> i1RawTableScan,
-    "i4_dvp_scan" -> i4DvpScan,
-    "i6_lineup_scan" -> i6LineupScan,
-    "i7_html_scan" -> i7HtmlScan,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "i11_nested_flatten" -> i11Sql,
-    "i10_jsonl_quarantine" -> i10Sql,
-    "i9_schema_evolution" -> i9Sql,
-    "s5_csv_scan" -> s5Sql,
-    "i8_html_page_prune" -> i8Sql,
-    "p11_table_size_gate" -> p11Sql,
-    "s11_run_summary" -> s11Sql,
-    "s12_csv_to_json" -> s12Sql,
-    "i1_raw_table_scan" -> i1Sql,
-    "i4_dvp_scan" -> i4Sql,
-    "i6_lineup_scan" -> i6Sql,
-    "i7_html_scan" -> i7Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("i11_nested_flatten", i11NestedFlatten, i11Sql),
+    QueryDef("i10_jsonl_quarantine", i10JsonlQuarantine, i10Sql),
+    QueryDef("i9_schema_evolution", i9SchemaEvolution, i9Sql),
+    QueryDef("s5_csv_scan", s5CsvScan, s5Sql),
+    QueryDef("i8_html_page_prune", i8HtmlPagePrune, i8Sql),
+    QueryDef("p11_table_size_gate", p11TableSizeGate, p11Sql),
+    QueryDef("s11_run_summary", s11RunSummary, s11Sql),
+    QueryDef("s12_csv_to_json", s12CsvToJson, s12Sql),
+    QueryDef("i1_raw_table_scan", i1RawTableScan, i1Sql),
+    QueryDef("i4_dvp_scan", i4DvpScan, i4Sql),
+    QueryDef("i6_lineup_scan", i6LineupScan, i6Sql),
+    QueryDef("i7_html_scan", i7HtmlScan, i7Sql),
   )
 }

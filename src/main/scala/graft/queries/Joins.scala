@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.QueryDef
 
 /** Beyond-reference join operators (SURVEY §2.4 notes the reference has
   * no relational join engine; equi/broadcast/anti joins are exercised in
@@ -473,21 +474,12 @@ object Joins {
       |WHERE o_orderpriority = '1-URGENT'
       |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "j1_asof_join" -> j1AsofJoin,
-    "j2_range_join" -> j2RangeJoin,
-    "j4_bucketed_join" -> j4BucketedJoin,
-    "j5_salted_skew_join" -> j5SaltedSkewJoin,
-    "j6_aqe_skew_join" -> j6AqeSkewJoin,
-    "j7_bloom_filter_join" -> j7BloomFilterJoin,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "j1_asof_join" -> j1Sql,
-    "j2_range_join" -> j2Sql,
-    "j4_bucketed_join" -> j4Sql,
-    "j5_salted_skew_join" -> j5Sql,
-    "j6_aqe_skew_join" -> j6Sql,
-    "j7_bloom_filter_join" -> j7Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("j1_asof_join", j1AsofJoin, j1Sql),
+    QueryDef("j2_range_join", j2RangeJoin, j2Sql),
+    QueryDef("j4_bucketed_join", j4BucketedJoin, j4Sql),
+    QueryDef("j5_salted_skew_join", j5SaltedSkewJoin, j5Sql),
+    QueryDef("j6_aqe_skew_join", j6AqeSkewJoin, j6Sql),
+    QueryDef("j7_bloom_filter_join", j7BloomFilterJoin, j7Sql),
   )
 }

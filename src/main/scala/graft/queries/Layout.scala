@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** Scan-elimination layouts (r12 verdict "next round" #2). j4 proved the
   * SHUFFLE-elimination layout (bucketing); this family proves the
@@ -1034,29 +1035,16 @@ object Layout {
       |  AND ts >= TIMESTAMP '$PruneLo' AND ts < TIMESTAMP '$PruneHi'
       |ORDER BY event_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a23_hidden_partitioning" -> a23HiddenPartitioning,
-    "a22_bloom_prune" -> a22BloomPrune,
-    "a21_manifest_prune" -> a21ManifestStatsPrune,
-    "a20_codec_layout" -> a20CodecLayout,
-    "a14_minmax_prune" -> a14MinmaxPrune,
-    "a15_dynamic_prune" -> a15DynamicPrune,
-    "a16_zorder_prune" -> a16ZorderPrune,
-    "a17_cbo_reorder" -> a17CboReorder,
-    "a18_profile" -> a18Profile,
-    "a19_agg_pushdown" -> a19AggPushdown,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "a23_hidden_partitioning" -> a23Sql,
-    "a22_bloom_prune" -> a22Sql,
-    "a21_manifest_prune" -> a21Sql,
-    "a14_minmax_prune" -> a14Sql,
-    "a15_dynamic_prune" -> a15Sql,
-    "a16_zorder_prune" -> a16Sql,
-    "a17_cbo_reorder" -> a17Sql,
-    "a18_profile" -> a18Sql,
-    "a19_agg_pushdown" -> a19Sql,
-    "a20_codec_layout" -> a20Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("a23_hidden_partitioning", a23HiddenPartitioning, a23Sql),
+    QueryDef("a22_bloom_prune", a22BloomPrune, a22Sql),
+    QueryDef("a21_manifest_prune", a21ManifestStatsPrune, a21Sql),
+    QueryDef("a20_codec_layout", a20CodecLayout, a20Sql),
+    QueryDef("a14_minmax_prune", a14MinmaxPrune, a14Sql),
+    QueryDef("a15_dynamic_prune", a15DynamicPrune, a15Sql),
+    QueryDef("a16_zorder_prune", a16ZorderPrune, a16Sql),
+    QueryDef("a17_cbo_reorder", a17CboReorder, a17Sql),
+    QueryDef("a18_profile", a18Profile, a18Sql),
+    QueryDef("a19_agg_pushdown", a19AggPushdown, a19Sql),
   )
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** Multimodal-column query surface: binary payloads with typed metadata
   * (full plumbing in [[graft.multimodal.Media]]; this is the
@@ -360,19 +361,11 @@ object Multimodal {
       |      FROM documents)
       |ORDER BY media_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m5_media_downsample" -> m5MediaDownsample,
-    "m1_binary_meta" -> m1BinaryMeta,
-    "m2_media_features" -> m2MediaFeatures,
-    "m3_media_dedup" -> m3MediaDedup,
-    "m4_payload_neardup" -> m4PayloadNearDup,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "m5_media_downsample" -> m5Sql,
-    "m1_binary_meta" -> m1Sql,
-    "m2_media_features" -> m2Sql,
-    "m3_media_dedup" -> m3Sql,
-    "m4_payload_neardup" -> m4Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("m5_media_downsample", m5MediaDownsample, m5Sql),
+    QueryDef("m1_binary_meta", m1BinaryMeta, m1Sql),
+    QueryDef("m2_media_features", m2MediaFeatures, m2Sql),
+    QueryDef("m3_media_dedup", m3MediaDedup, m3Sql),
+    QueryDef("m4_payload_neardup", m4PayloadNearDup, m4Sql),
   )
 }

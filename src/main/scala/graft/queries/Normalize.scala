@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables.sqlLitDuck
 import graft.normalize.Columns
+import graft.QueryDef
 
 /** P1–P3 schema normalization under the oracle: the reference's central
   * data-model feature (MultiIndex flatten → canonical rename → duplicate
@@ -130,11 +131,7 @@ object Normalize {
       |FROM ded ORDER BY table_id, col_idx""".stripMargin
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p1_header_normalize" -> p1HeaderNormalize,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "p1_header_normalize" -> p1Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("p1_header_normalize", p1HeaderNormalize, p1Sql),
   )
 }

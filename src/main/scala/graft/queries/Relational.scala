@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.QueryDef
 
 /** Core relational query surface: scans, filters, projections, joins,
   * aggregations, windows, sorts, set ops — the Spark re-expression of the
@@ -789,67 +790,35 @@ object Relational {
       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
       |ORDER BY user_id, event_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a10_rollup_totals" -> a10RollupTotals,
-    "a11_percentiles" -> a11Percentiles,
-    "a12_grouped_topk" -> a12GroupedTopK,
-    "o9_full_outer_reconcile" -> o9FullOuterReconcile,
-    "o8_intersect" -> o8Intersect,
-    "w4_lead_lag" -> w4LeadLag,
-    "q1_pricing_summary" -> q1PricingSummary,
-    "q2_revenue_by_nation" -> q2RevenueByNation,
-    "q3_top_orders" -> q3TopOrders,
-    "q4_filter_tally" -> q4FilterTally,
-    "q5_decorrelated_exists" -> q5DecorrelatedExists,
-    "p6_header_row_filter" -> p6HeaderRowFilter,
-    "p7_pattern_exclusion" -> p7PatternExclusion,
-    "p8_keyword_length" -> p8KeywordLength,
-    "f2_date_reformat" -> f2DateReformat,
-    "f19_md5_id" -> f19Md5Id,
-    "a2_collect_per_key" -> a2CollectPerKey,
-    "a3_bucket_categorize" -> a3BucketCategorize,
-    "a7_argmax_per_group" -> a7ArgmaxPerGroup,
-    "a8_missing_keys_antijoin" -> a8MissingKeysAntiJoin,
-    "a9_completeness_grid" -> a9CompletenessGrid,
-    "o4_union_by_name" -> o4UnionByName,
-    "o5_prefix_dedup" -> o5PrefixDedup,
-    "w1_carry_forward" -> w1CarryForward,
-    "w5_gap_fill" -> w5GapFill,
-    "w6_daily_actives" -> w6DailyActives,
-    "w7_cohort_retention" -> w7CohortRetention,
-    "w2_occurrence_rank" -> w2OccurrenceRank,
-    "w3_rolling_avg" -> w3RollingAvg,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "a10_rollup_totals" -> a10Sql,
-    "a11_percentiles" -> a11Sql,
-    "a12_grouped_topk" -> a12Sql,
-    "o9_full_outer_reconcile" -> o9Sql,
-    "o8_intersect" -> o8Sql,
-    "w4_lead_lag" -> w4Sql,
-    "q1_pricing_summary" -> q1Sql,
-    "q2_revenue_by_nation" -> q2Sql,
-    "q3_top_orders" -> q3Sql,
-    "q4_filter_tally" -> q4Sql,
-    "q5_decorrelated_exists" -> q5Sql,
-    "p6_header_row_filter" -> p6Sql,
-    "p7_pattern_exclusion" -> p7Sql,
-    "p8_keyword_length" -> p8Sql,
-    "f2_date_reformat" -> f2Sql,
-    "f19_md5_id" -> f19Sql,
-    "a2_collect_per_key" -> a2Sql,
-    "a3_bucket_categorize" -> a3Sql,
-    "a7_argmax_per_group" -> a7Sql,
-    "a8_missing_keys_antijoin" -> a8Sql,
-    "a9_completeness_grid" -> a9Sql,
-    "o4_union_by_name" -> o4Sql,
-    "o5_prefix_dedup" -> o5Sql,
-    "w1_carry_forward" -> w1Sql,
-    "w5_gap_fill" -> w5Sql,
-    "w6_daily_actives" -> w6Sql,
-    "w7_cohort_retention" -> w7Sql,
-    "w2_occurrence_rank" -> w2Sql,
-    "w3_rolling_avg" -> w3Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("a10_rollup_totals", a10RollupTotals, a10Sql),
+    QueryDef("a11_percentiles", a11Percentiles, a11Sql),
+    QueryDef("a12_grouped_topk", a12GroupedTopK, a12Sql),
+    QueryDef("o9_full_outer_reconcile", o9FullOuterReconcile, o9Sql),
+    QueryDef("o8_intersect", o8Intersect, o8Sql),
+    QueryDef("w4_lead_lag", w4LeadLag, w4Sql),
+    QueryDef("q1_pricing_summary", q1PricingSummary, q1Sql),
+    QueryDef("q2_revenue_by_nation", q2RevenueByNation, q2Sql),
+    QueryDef("q3_top_orders", q3TopOrders, q3Sql),
+    QueryDef("q4_filter_tally", q4FilterTally, q4Sql),
+    QueryDef("q5_decorrelated_exists", q5DecorrelatedExists, q5Sql),
+    QueryDef("p6_header_row_filter", p6HeaderRowFilter, p6Sql),
+    QueryDef("p7_pattern_exclusion", p7PatternExclusion, p7Sql),
+    QueryDef("p8_keyword_length", p8KeywordLength, p8Sql),
+    QueryDef("f2_date_reformat", f2DateReformat, f2Sql),
+    QueryDef("f19_md5_id", f19Md5Id, f19Sql),
+    QueryDef("a2_collect_per_key", a2CollectPerKey, a2Sql),
+    QueryDef("a3_bucket_categorize", a3BucketCategorize, a3Sql),
+    QueryDef("a7_argmax_per_group", a7ArgmaxPerGroup, a7Sql),
+    QueryDef("a8_missing_keys_antijoin", a8MissingKeysAntiJoin, a8Sql),
+    QueryDef("a9_completeness_grid", a9CompletenessGrid, a9Sql),
+    QueryDef("o4_union_by_name", o4UnionByName, o4Sql),
+    QueryDef("o5_prefix_dedup", o5PrefixDedup, o5Sql),
+    QueryDef("w1_carry_forward", w1CarryForward, w1Sql),
+    QueryDef("w5_gap_fill", w5GapFill, w5Sql),
+    QueryDef("w6_daily_actives", w6DailyActives, w6Sql),
+    QueryDef("w7_cohort_retention", w7CohortRetention, w7Sql),
+    QueryDef("w2_occurrence_rank", w2OccurrenceRank, w2Sql),
+    QueryDef("w3_rolling_avg", w3RollingAvg, w3Sql),
   )
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** O31 — row tracking (round-20 verdict stretch #6, the public Delta
   * row-tracking shape): a stable per-row id that SURVIVES physical
@@ -269,11 +270,7 @@ object RowTracking {
       |  FROM documents WHERE doc_id % 10 <> 6)
       |ORDER BY version, doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "o31_row_tracking" -> o31RowTracking,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "o31_row_tracking" -> o31Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("o31_row_tracking", o31RowTracking, o31Sql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.clean.Clean
 import graft.extract.Extract
+import graft.QueryDef
 
 /** Scalar-extraction operator queries closing the SURVEY §2.3 oracle gap:
   * the insight scalars (F8 matchup, F9 game-time, F12 hit-rate, F13
@@ -224,19 +225,11 @@ object Scalars {
       |  length(text) > 200 AS was_truncated
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "f8_insight_scalars" -> f8InsightScalars,
-    "f14_name_classify" -> f14NameClassify,
-    "f18_sanitize_repair" -> f18SanitizeRepair,
-    "f20_truncation_guard" -> f20TruncationGuard,
-    "f21_spread_total" -> f21SpreadTotal,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "f8_insight_scalars" -> f8Sql,
-    "f14_name_classify" -> f14Sql,
-    "f18_sanitize_repair" -> f18Sql,
-    "f20_truncation_guard" -> f20Sql,
-    "f21_spread_total" -> f21Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("f8_insight_scalars", f8InsightScalars, f8Sql),
+    QueryDef("f14_name_classify", f14NameClassify, f14Sql),
+    QueryDef("f18_sanitize_repair", f18SanitizeRepair, f18Sql),
+    QueryDef("f20_truncation_guard", f20TruncationGuard, f20Sql),
+    QueryDef("f21_spread_total", f21SpreadTotal, f21Sql),
   )
 }

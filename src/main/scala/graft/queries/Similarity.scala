@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 import graft.plans.GraftExtensions
+import OracleSql.{cos, dot, uq}
+import graft.QueryDef
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, 64-dim):
   * brute-force cosine top-k as the correctness baseline and a
@@ -61,16 +63,6 @@ object Similarity {
       .withColumn("nrm", sqrt(expr("graft_dot(embedding, embedding)")))
   }
 
-  /** DuckDB rendering of the same strict-left-fold cosine. */
-  private[queries] def cosineSql(a: String, b: String): String = {
-    def fold(items: String) =
-      s"list_reduce(list_prepend(0.0, $items), (acc, x) -> acc + x)"
-    val dot = fold(s"list_transform(range(1, len($a)+1), i -> $a[i]::DOUBLE * $b[i]::DOUBLE)")
-    val na = fold(s"list_transform(range(1, len($a)+1), i -> $a[i]::DOUBLE * $a[i]::DOUBLE)")
-    val nb = fold(s"list_transform(range(1, len($b)+1), i -> $b[i]::DOUBLE * $b[i]::DOUBLE)")
-    s"$dot / (sqrt($na) * sqrt($nb))"
-  }
-
   /** S1 — brute-force cosine top-k: for each query vector (vec_id < 10),
     * the 5 nearest neighbors among all other vectors. The query side is
     * broadcast; the full table is scanned exactly once; per-query top-5
@@ -122,7 +114,7 @@ object Similarity {
   }
 
   val s1Sql: String = {
-    val cos = cosineSql("q.qe", "e.embedding")
+    val cos = OracleSql.cos("q.qe", "e.embedding")
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
       |  FROM embeddings WHERE vec_id < 10)
       |SELECT query_id, neighbor_id, rank, floor(cos * 1000000.0 + 0.5) / 1000000.0 AS cos_sim FROM (
@@ -182,7 +174,7 @@ object Similarity {
   }
 
   val s22Sql: String = {
-    val cos = cosineSql("q.qe", "e.embedding")
+    val cos = OracleSql.cos("q.qe", "e.embedding")
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
       |  FROM embeddings WHERE vec_id < 10)
       |SELECT query_id, neighbor_id, rank,
@@ -271,7 +263,7 @@ object Similarity {
         s"substr(a.sgn, ${p * lshBits + 1}, $lshBits) <> substr(b.sgn, ${p * lshBits + 1}, $lshBits)")
       (s"a.band = $b" +: earlier).mkString("(", " AND ", ")")
     }.mkString(" OR ")
-    val cos = cosineSql("a.embedding", "b.embedding")
+    val cos = OracleSql.cos("a.embedding", "b.embedding")
     s"""WITH keyed AS (SELECT vec_id, embedding, $sgn AS sgn FROM $src),
       |bands AS (
       |  SELECT vec_id, embedding, sgn, band,
@@ -320,7 +312,7 @@ object Similarity {
       .orderBy("vec_a", "vec_b")
 
   val s3Sql: String = {
-    val cos = cosineSql("a.embedding", "b.embedding")
+    val cos = OracleSql.cos("a.embedding", "b.embedding")
     s"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, floor(($cos) * 1000000.0 + 0.5) / 1000000.0 AS cos_sim
       |FROM embeddings a JOIN embeddings b
       |  ON a.vec_id < b.vec_id AND a.vec_id < $s3Cap AND b.vec_id < $s3Cap
@@ -775,8 +767,8 @@ object Similarity {
     * unordered — single SQL source for the s4 oracle and composites.
     */
   private def s4CoreSqlOver(src: String): String = {
-    val assignCos = cosineSql("e.embedding", "c.ce")
-    val probeCos = cosineSql("q.qe", "a.embedding")
+    val assignCos = cos("e.embedding", "c.ce")
+    val probeCos = cos("q.qe", "a.embedding")
     s"""WITH cent AS (SELECT vec_id AS cent_id, embedding AS ce
       |  FROM $src WHERE vec_id < 8),
       |assigned AS (
@@ -942,8 +934,8 @@ object Similarity {
   }
 
   val s7Sql: String = {
-    val cos = cosineSql("a.embedding", "b.embedding")
-    val qcos = cosineSql("q.qe", "a.embedding")
+    val cos = OracleSql.cos("a.embedding", "b.embedding")
+    val qcos = OracleSql.cos("q.qe", "a.embedding")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < $s3Cap),
       |truth_pairs AS (
       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
@@ -1020,8 +1012,8 @@ object Similarity {
   }
 
   val s10Sql: String = {
-    val assignCos = cosineSql("e.embedding", "c.ce")
-    val probeCos = cosineSql("q.qe", "a.embedding")
+    val assignCos = cos("e.embedding", "c.ce")
+    val probeCos = cos("q.qe", "a.embedding")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < $s3Cap),
       |cent AS (SELECT vec_id AS cent_id, embedding AS ce FROM e WHERE vec_id < 8),
       |crn AS (
@@ -1254,7 +1246,6 @@ object Similarity {
     * <p>vgrp/<p>`; expects a vector CTE `e`(vec_id, embedding). */
   private[queries] def hierAssignSql(p: String, cents: String,
       m: Int): String = {
-    def cos(a: String, b: String) = cosineSql(a, b)
     s"""${p}seed AS (
       |  SELECT cent_id AS lid, ce AS le FROM $cents
       |  ORDER BY cent_id LIMIT $m),
@@ -1361,7 +1352,6 @@ object Similarity {
   }
 
   val s14Sql: String = {
-    def cos(a: String, b: String) = cosineSql(a, b)
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < $s3Cap),
       |cent0 AS (SELECT vec_id AS cent_id,
       |    list_transform(embedding, x -> x::DOUBLE) AS ce
@@ -1453,9 +1443,6 @@ object Similarity {
   }
 
   val s16Sql: String = {
-    def cos(a: String, b: String) = cosineSql(a, b)
-    def foldSq(a: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($a)+1), i -> $a[i]::DOUBLE * $a[i]::DOUBLE)), (acc, x) -> acc + x)"
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < $s3Cap),
       |cent0 AS (SELECT vec_id AS cent_id,
       |    list_transform(embedding, x -> x::DOUBLE) AS ce
@@ -1479,7 +1466,7 @@ object Similarity {
       |  GROUP BY cell),
       |dims_sph AS (
       |  SELECT a1.cell, i - 1 AS pos,
-      |    CAST(floor(e.embedding[i]::DOUBLE / sqrt(${foldSq("e.embedding")})
+      |    CAST(floor(e.embedding[i]::DOUBLE / sqrt(${dot("e.embedding", "e.embedding")})
       |      * 1000000.0 + 0.5) AS BIGINT) AS q
       |  FROM a1 JOIN e USING (vec_id),
       |    LATERAL (SELECT unnest(range(1, len(e.embedding) + 1)) AS i)),
@@ -1581,7 +1568,6 @@ object Similarity {
   }
 
   val s21Sql: String = {
-    def cos(a: String, b: String) = cosineSql(a, b)
     val nlist = 8
     // the maximin chain: s0 = lowest id; s_i = argmin over the corpus of
     // max-cosine against the seeds chosen so far, ties by vec_id
@@ -1814,7 +1800,6 @@ object Similarity {
   }
 
   val s24Sql: String = {
-    def cos(a: String, b: String) = cosineSql(a, b)
     def draw(r: Int) =
       s"('0x' || substr(md5('kmp:$r:' || vec_id), 1, 8))::BIGINT % 1000000"
     def costCte(candSel: String, n: Int) =
@@ -1984,8 +1969,8 @@ object Similarity {
   }
 
   val s15Sql: String = {
-    val assignCos = cosineSql("e.embedding", "c.ce")
-    val probeCos = cosineSql("q.qe", "a.embedding")
+    val assignCos = cos("e.embedding", "c.ce")
+    val probeCos = cos("q.qe", "a.embedding")
     val cfgValues = s15Configs.map { case (nl, np) => s"($nl, $np)" }.mkString(", ")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < $s3Cap),
       |cfg AS (SELECT * FROM (VALUES $cfgValues) c(nlist, np)),
@@ -2021,14 +2006,14 @@ object Similarity {
       |  SELECT f.nlist, f.np, t.query_id, t.qe, t.cent_id AS qcell FROM (
       |    SELECT c.nlist, q.vec_id AS query_id, q.embedding AS qe, c.cent_id,
       |      row_number() OVER (PARTITION BY c.nlist, q.vec_id
-      |        ORDER BY ${cosineSql("q.embedding", "c.ce")} DESC, c.cent_id) AS rn
+      |        ORDER BY ${cos("q.embedding", "c.ce")} DESC, c.cent_id) AS rn
       |    FROM (SELECT vec_id, embedding FROM e
       |          WHERE vec_id >= 8 AND vec_id < 13) q
       |    CROSS JOIN cent1 c) t
       |  JOIN cfg f ON f.nlist = t.nlist AND t.rn <= f.np),
       |cand AS (
       |  SELECT q.nlist, q.np, q.query_id, a.vec_id,
-      |    ${cosineSql("q.qe", "e.embedding")} AS cos
+      |    ${cos("q.qe", "e.embedding")} AS cos
       |  FROM qcells q
       |  JOIN a2 a ON a.nlist = q.nlist AND a.cell = q.qcell
       |    AND a.vec_id <> q.query_id
@@ -2175,10 +2160,7 @@ object Similarity {
     val qsubs = pqSubvectors(
       q.select(col("query_id").as("vec_id"), col("qe").as("embedding")))
       .select(col("vec_id").as("query_id"), col("sub"), col("sv").as("qsv"))
-    // integer micro-unit quantizer: bit-identical across engines at the
-    // element level (the s16 pattern); products/sums stay exact BIGINTs
-    def uq(x: String) =
-      s"CAST(floor(CAST($x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
+    // uq products/sums stay exact BIGINTs (the s16 pattern)
     val lut = qsubs.join(cb, "sub")
       .select(col("query_id"), col("sub"), col("code"),
         expr(s"aggregate(zip_with(qsv, cw, (x, y) -> ${uq("x")} * ${uq("y")})," +
@@ -2218,10 +2200,7 @@ object Similarity {
   }
 
   val s18Sql: String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($a)+1)," +
-        s" i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (acc, x) -> acc + x)"
-    val cos = cosineSql("q.qe", "e.embedding")
+    val cos = OracleSql.cos("q.qe", "e.embedding")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < $s3Cap),
       |subs AS (
       |  SELECT vec_id, j AS sub,
@@ -2422,8 +2401,6 @@ object Similarity {
     val qsubs = pqSubvectors(
       q.select(col("query_id").as("vec_id"), col("qe").as("embedding")))
       .select(col("vec_id").as("query_id"), col("sub"), col("sv").as("qsv"))
-    def uq(x: String) =
-      s"CAST(floor(CAST($x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
     val lut = qsubs.join(cb, "sub")
       .select(col("query_id"), col("sub"), col("code"),
         expr(s"aggregate(zip_with(qsv, cw, (x, y) -> ${uq("x")} * ${uq("y")})," +
@@ -2502,12 +2479,7 @@ object Similarity {
   }
 
   val s19Sql: String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($a)+1)," +
-        s" i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (acc, x) -> acc + x)"
-    val cos = cosineSql("q.qe", "e.embedding")
-    def uq(x: String) =
-      s"CAST(floor($x::DOUBLE * 1000000.0 + 0.5) AS BIGINT)"
+    val cos = OracleSql.cos("q.qe", "e.embedding")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < $s3Cap),
       |cent AS (SELECT vec_id AS cent_id, embedding AS ce
       |  FROM e WHERE vec_id < 8),
@@ -2656,12 +2628,7 @@ object Similarity {
     * raw and OPQ-permuted. No trailing ORDER BY (callers append). */
   private[queries] def residualPqSqlOver(prologue: String,
       eDef: String): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($a)+1)," +
-        s" i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (acc, x) -> acc + x)"
-    val cos = cosineSql("q.qe", "e.embedding")
-    def uq(x: String) =
-      s"CAST(floor($x::DOUBLE * 1000000.0 + 0.5) AS BIGINT)"
+    val cos = OracleSql.cos("q.qe", "e.embedding")
     def ipDot(a: String, b: String, n: String) =
       s"CAST(list_reduce(list_prepend(0, list_transform(range(1, len($n)+1)," +
         s" i -> ${uq(s"$a[i]")} * ${uq(s"$b[i]")}))," +
@@ -2922,8 +2889,6 @@ object Similarity {
   }
 
   val s26Sql: String = {
-    def uq(x: String) =
-      s"CAST(floor($x::DOUBLE * 1000000.0 + 0.5) AS BIGINT)"
     val nDims = pqM * pqSubDim
     val anisDef =
       s"""SELECT vec_id, list_transform(range(1, len(embedding) + 1),
@@ -3001,8 +2966,6 @@ object Similarity {
     val qsubs = pqSubvectors(
       q.select(col("query_id").as("vec_id"), col("qe").as("embedding")))
       .select(col("vec_id").as("query_id"), col("sub"), col("sv").as("qsv"))
-    def uq(x: String) =
-      s"CAST(floor(CAST($x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
     val lut = qsubs.join(cb, "sub")
       .select(col("query_id"), col("sub"), col("code"),
         expr(s"aggregate(zip_with(qsv, cw, (x, y) -> ${uq("x")} * ${uq("y")})," +
@@ -3059,11 +3022,8 @@ object Similarity {
   }
 
   val s20Sql: String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($a)+1)," +
-        s" i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (acc, x) -> acc + x)"
-    val cos = cosineSql("q.qe", "e.embedding")
-    val rcos = cosineSql("q.qe", "v.embedding")
+    val cos = OracleSql.cos("q.qe", "e.embedding")
+    val rcos = OracleSql.cos("q.qe", "v.embedding")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < $s3Cap),
       |subs AS (
       |  SELECT vec_id, j AS sub,
@@ -3157,60 +3117,33 @@ object Similarity {
       |ORDER BY r.query_id, r.rank""".stripMargin
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s18_pq_adc" -> s18PqAdc,
-    "s19_ivfpq" -> s19IvfPq,
-    "s25_residual_pq" -> s25ResidualPq,
-    "s26_opq_permute" -> s26OpqPermute,
-    "s20_rerank" -> s20Rerank,
-    "s7_ann_recall" -> s7AnnRecall,
-    "s10_ivf_multiprobe" -> s10IvfMultiprobe,
-    "s14_kmeans_refine" -> s14KmeansRefine,
-    "s21_maximin_refine" -> s21MaximinRefine,
-    "s24_kmeans_parallel" -> s24KmeansParallel,
-    "s15_scaled_nlist" -> s15ScaledNlist,
-    "s16_spherical_refine" -> s16SphericalRefine,
-    "s6_quantize_int8" -> s6QuantizeInt8,
-    "s5_label_centroids" -> s5LabelCentroids,
-    "s1_bruteforce_topk" -> s1BruteForceTopK,
-    "s22_filtered_topk" -> s22FilteredTopK,
-    "s23_hier_assign" -> s23HierAssign,
-    "s2_lsh_neardup" -> s2LshNearDup,
-    "s3_embedding_neardup" -> s3EmbeddingNearDup,
-    "s4_ivf_topk" -> s4IvfTopK,
-    "s8_ivf_persisted" -> s8IvfPersisted,
-    "s27_manifest_ivf" -> s27ManifestIvf,
-    "s28_ivf_cell_split" -> s28IvfCellSplit,
-    "s17_ivf_incremental" -> s17IvfIncremental,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "s18_pq_adc" -> s18Sql,
-    "s19_ivfpq" -> s19Sql,
-    "s25_residual_pq" -> s25Sql,
-    "s26_opq_permute" -> s26Sql,
-    "s20_rerank" -> s20Sql,
-    "s7_ann_recall" -> s7Sql,
-    "s10_ivf_multiprobe" -> s10Sql,
-    "s14_kmeans_refine" -> s14Sql,
-    "s21_maximin_refine" -> s21Sql,
-    "s24_kmeans_parallel" -> s24Sql,
-    "s15_scaled_nlist" -> s15Sql,
-    "s16_spherical_refine" -> s16Sql,
-    "s6_quantize_int8" -> s6Sql,
-    "s5_label_centroids" -> s5Sql,
-    "s1_bruteforce_topk" -> s1Sql,
-    "s22_filtered_topk" -> s22Sql,
-    "s23_hier_assign" -> s23Sql,
-    "s2_lsh_neardup" -> s2Sql,
-    "s3_embedding_neardup" -> s3Sql,
-    "s4_ivf_topk" -> s4Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("s18_pq_adc", s18PqAdc, s18Sql),
+    QueryDef("s19_ivfpq", s19IvfPq, s19Sql),
+    QueryDef("s25_residual_pq", s25ResidualPq, s25Sql),
+    QueryDef("s26_opq_permute", s26OpqPermute, s26Sql),
+    QueryDef("s20_rerank", s20Rerank, s20Sql),
+    QueryDef("s7_ann_recall", s7AnnRecall, s7Sql),
+    QueryDef("s10_ivf_multiprobe", s10IvfMultiprobe, s10Sql),
+    QueryDef("s14_kmeans_refine", s14KmeansRefine, s14Sql),
+    QueryDef("s21_maximin_refine", s21MaximinRefine, s21Sql),
+    QueryDef("s24_kmeans_parallel", s24KmeansParallel, s24Sql),
+    QueryDef("s15_scaled_nlist", s15ScaledNlist, s15Sql),
+    QueryDef("s16_spherical_refine", s16SphericalRefine, s16Sql),
+    QueryDef("s6_quantize_int8", s6QuantizeInt8, s6Sql),
+    QueryDef("s5_label_centroids", s5LabelCentroids, s5Sql),
+    QueryDef("s1_bruteforce_topk", s1BruteForceTopK, s1Sql),
+    QueryDef("s22_filtered_topk", s22FilteredTopK, s22Sql),
+    QueryDef("s23_hier_assign", s23HierAssign, s23Sql),
+    QueryDef("s2_lsh_neardup", s2LshNearDup, s2Sql),
+    QueryDef("s3_embedding_neardup", s3EmbeddingNearDup, s3Sql),
+    QueryDef("s4_ivf_topk", s4IvfTopK, s4Sql),
     // the persisted AND the incrementally-appended index must both
     // reproduce the EXACT all-at-once IVF answer
-    "s8_ivf_persisted" -> s4Sql,
+    QueryDef("s8_ivf_persisted", s8IvfPersisted, s4Sql),
     // routing changes which FILES are read, never the result
-    "s27_manifest_ivf" -> s4Sql,
-    "s28_ivf_cell_split" -> s4Sql,
-    "s17_ivf_incremental" -> s4Sql,
+    QueryDef("s27_manifest_ivf", s27ManifestIvf, s4Sql),
+    QueryDef("s28_ivf_cell_split", s28IvfCellSplit, s4Sql),
+    QueryDef("s17_ivf_incremental", s17IvfIncremental, s4Sql),
   )
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** Sketch operators — the fixed-size-state summaries a 100 TB pipeline
   * leans on when exact answers would shuffle corpus-sized state:
@@ -400,17 +401,10 @@ object Sketches {
       .select(explode(split(trim(col("text")), "\\s+")).as("word"))
       .filter(length(col("word")) > 0)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "k1_cms_heavy_hitters" -> k1CmsHeavyHitters,
-    "k2_hll_distinct" -> k2HllDistinct,
-    "k3_bloom_membership" -> k3BloomMembership,
-    "k4_hist_quantiles" -> k4HistQuantiles,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "k1_cms_heavy_hitters" -> k1Sql,
-    "k2_hll_distinct" -> k2Sql,
-    "k3_bloom_membership" -> k3Sql,
-    "k4_hist_quantiles" -> k4Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("k1_cms_heavy_hitters", k1CmsHeavyHitters, k1Sql),
+    QueryDef("k2_hll_distinct", k2HllDistinct, k2Sql),
+    QueryDef("k3_bloom_membership", k3BloomMembership, k3Sql),
+    QueryDef("k4_hist_quantiles", k4HistQuantiles, k4Sql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.QueryDef
 
 /** Text-analysis operators over `documents`: n-gram-lexicon language ID,
   * quality scoring, token counting, and polynomial document
@@ -1148,39 +1149,21 @@ object TextAnalysis {
 
   val t15Sql: String = lmQualitySqlOver("lang = 'en' AND doc_id % 2 = 0")
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t14_lm_quality_filter" -> t14LmQualityFilter,
-    "t15_frozen_lm_quality" -> t15FrozenLmQuality,
-    "t12_source_drift" -> t12SourceDrift,
-    "t1_lang_id" -> t1LangId,
-    "t10_bpe_train" -> t10BpeTrain,
-    "t13_bpe_apply" -> t13BpeApply,
-    "t11_tfidf" -> t11Tfidf,
-    "t9_novelty" -> t9Novelty,
-    "t8_surprisal" -> t8Surprisal,
-    "t2_quality_score" -> t2QualityScore,
-    "t3_token_count" -> t3TokenCount,
-    "t4_fingerprint" -> t4Fingerprint,
-    "t5_pii_redact" -> t5PiiRedact,
-    "t6_repetition" -> t6Repetition,
-    "t7_vocab_topk" -> t7VocabTopK,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "t14_lm_quality_filter" -> t14Sql,
-    "t15_frozen_lm_quality" -> t15Sql,
-    "t12_source_drift" -> t12Sql,
-    "t1_lang_id" -> t1Sql,
-    "t10_bpe_train" -> t10Sql,
-    "t13_bpe_apply" -> t13Sql,
-    "t11_tfidf" -> t11Sql,
-    "t9_novelty" -> t9Sql,
-    "t8_surprisal" -> t8Sql,
-    "t2_quality_score" -> t2Sql,
-    "t3_token_count" -> t3Sql,
-    "t4_fingerprint" -> t4Sql,
-    "t5_pii_redact" -> t5Sql,
-    "t6_repetition" -> t6Sql,
-    "t7_vocab_topk" -> t7Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("t14_lm_quality_filter", t14LmQualityFilter, t14Sql),
+    QueryDef("t15_frozen_lm_quality", t15FrozenLmQuality, t15Sql),
+    QueryDef("t12_source_drift", t12SourceDrift, t12Sql),
+    QueryDef("t1_lang_id", t1LangId, t1Sql),
+    QueryDef("t10_bpe_train", t10BpeTrain, t10Sql),
+    QueryDef("t13_bpe_apply", t13BpeApply, t13Sql),
+    QueryDef("t11_tfidf", t11Tfidf, t11Sql),
+    QueryDef("t9_novelty", t9Novelty, t9Sql),
+    QueryDef("t8_surprisal", t8Surprisal, t8Sql),
+    QueryDef("t2_quality_score", t2QualityScore, t2Sql),
+    QueryDef("t3_token_count", t3TokenCount, t3Sql),
+    QueryDef("t4_fingerprint", t4Fingerprint, t4Sql),
+    QueryDef("t5_pii_redact", t5PiiRedact, t5Sql),
+    QueryDef("t6_repetition", t6Repetition, t6Sql),
+    QueryDef("t7_vocab_topk", t7VocabTopK, t7Sql),
   )
 }

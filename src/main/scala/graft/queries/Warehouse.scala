@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.QueryDef
 
 /** Warehouse maintenance operators: the two change-data shapes every
   * large dimensional pipeline runs — building a type-2 slowly-changing
@@ -2548,45 +2549,24 @@ object Warehouse {
       |  WHERE doc_id % 10 <> 3 AND lang <> 'de')
       |ORDER BY version, doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "o26_dv_vacuum" -> o26DvVacuum,
-    "o25_partition_conflicts" -> o25PartitionConflicts,
-    "o24_dv_change_feed" -> o24DvChangeFeed,
-    "o23_manifest_checkpoint" -> o23ManifestCheckpoint,
-    "o22_deletion_vectors" -> o22DeletionVectors,
-    "o21_shallow_clone" -> o21ShallowClone,
-    "o20_change_data_feed" -> o20ChangeDataFeed,
-    "o19_partition_evolution" -> o19PartitionEvolution,
-    "o18_field_id_evolution" -> o18FieldIdEvolution,
-    "o17_schema_evolution" -> o17SchemaEvolution,
-    "o16_commit_conflict" -> o16CommitConflict,
-    "o14_write_constraints" -> o14WriteConstraints,
-    "o9_scd2_history" -> o9Scd2History,
-    "o10_merge_upsert" -> o10MergeUpsert,
-    "o11_incremental_agg" -> o11IncrementalAgg,
-    "o12_time_travel" -> o12TimeTravel,
-    "o15_optimize_snapshot" -> o15OptimizeSnapshot,
-    "o13_snapshot_vacuum" -> o13SnapshotVacuum,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "o26_dv_vacuum" -> o26Sql,
-    "o25_partition_conflicts" -> o25Sql,
-    "o24_dv_change_feed" -> o24Sql,
-    "o23_manifest_checkpoint" -> o23Sql,
-    "o22_deletion_vectors" -> o22Sql,
-    "o21_shallow_clone" -> o21Sql,
-    "o20_change_data_feed" -> o20Sql,
-    "o19_partition_evolution" -> o19Sql,
-    "o18_field_id_evolution" -> o18Sql,
-    "o17_schema_evolution" -> o17Sql,
-    "o16_commit_conflict" -> o16Sql,
-    "o14_write_constraints" -> o14Sql,
-    "o9_scd2_history" -> o9Sql,
-    "o10_merge_upsert" -> o10Sql,
-    "o11_incremental_agg" -> o11Sql,
-    "o12_time_travel" -> o12Sql,
-    "o15_optimize_snapshot" -> o15Sql,
-    "o13_snapshot_vacuum" -> o13Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("o26_dv_vacuum", o26DvVacuum, o26Sql),
+    QueryDef("o25_partition_conflicts", o25PartitionConflicts, o25Sql),
+    QueryDef("o24_dv_change_feed", o24DvChangeFeed, o24Sql),
+    QueryDef("o23_manifest_checkpoint", o23ManifestCheckpoint, o23Sql),
+    QueryDef("o22_deletion_vectors", o22DeletionVectors, o22Sql),
+    QueryDef("o21_shallow_clone", o21ShallowClone, o21Sql),
+    QueryDef("o20_change_data_feed", o20ChangeDataFeed, o20Sql),
+    QueryDef("o19_partition_evolution", o19PartitionEvolution, o19Sql),
+    QueryDef("o18_field_id_evolution", o18FieldIdEvolution, o18Sql),
+    QueryDef("o17_schema_evolution", o17SchemaEvolution, o17Sql),
+    QueryDef("o16_commit_conflict", o16CommitConflict, o16Sql),
+    QueryDef("o14_write_constraints", o14WriteConstraints, o14Sql),
+    QueryDef("o9_scd2_history", o9Scd2History, o9Sql),
+    QueryDef("o10_merge_upsert", o10MergeUpsert, o10Sql),
+    QueryDef("o11_incremental_agg", o11IncrementalAgg, o11Sql),
+    QueryDef("o12_time_travel", o12TimeTravel, o12Sql),
+    QueryDef("o15_optimize_snapshot", o15OptimizeSnapshot, o15Sql),
+    QueryDef("o13_snapshot_vacuum", o13SnapshotVacuum, o13Sql),
   )
 }

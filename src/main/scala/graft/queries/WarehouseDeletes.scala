@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** The two delete/write shapes that complete the o22 table's public
   * mechanism set (round-20 verdict asks #1 and #2):
@@ -378,13 +379,8 @@ object WarehouseDeletes {
       |  UNION ALL SELECT 3, cust_id, segment, bal FROM merged)
       |ORDER BY version, cust_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "o27_equality_deletes" -> o27EqualityDeletes,
-    "o28_dv_merge" -> o28DvMerge,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "o27_equality_deletes" -> o27Sql,
-    "o28_dv_merge" -> o28Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("o27_equality_deletes", o27EqualityDeletes, o27Sql),
+    QueryDef("o28_dv_merge", o28DvMerge, o28Sql),
   )
 }

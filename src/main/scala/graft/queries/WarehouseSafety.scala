@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** The two safety compositions the round-19 verdict named (round-20
   * asks #3 and #4): retention must not strand the structures OTHER
@@ -647,15 +648,9 @@ object WarehouseSafety {
       |  UNION ALL SELECT 3, cust_id, segment, bal FROM v3)
       |ORDER BY version, cust_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "o29_retention_checkpoint" -> o29RetentionCheckpoint,
-    "o30_file_conflicts" -> o30FileConflicts,
-    "o32_protocol_gate" -> o32ProtocolGate,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "o29_retention_checkpoint" -> o29Sql,
-    "o30_file_conflicts" -> o30Sql,
-    "o32_protocol_gate" -> o32Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("o29_retention_checkpoint", o29RetentionCheckpoint, o29Sql),
+    QueryDef("o30_file_conflicts", o30FileConflicts, o30Sql),
+    QueryDef("o32_protocol_gate", o32ProtocolGate, o32Sql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 import graft.queries.Warehouse
+import graft.QueryDef
 
 /** ST25 — exactly-once streaming INTO the o16 CAS snapshot table: the
   * public Delta-Lake streaming-sink shape (idempotent writes keyed by
@@ -186,11 +187,7 @@ object CasSink {
       |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) * 2 AS total_value
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st25_stream_cas_sink" -> st25StreamCasSink,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st25_stream_cas_sink" -> st25Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st25_stream_cas_sink", st25StreamCasSink, st25Sql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 import graft.queries.{Warehouse, WarehouseDeletes}
+import graft.QueryDef
 
 /** ST29 — the streaming CDC DELETE writer (the o27×st16 composition the
   * r19 verdict motivated equality deletes with: "a streaming CDC writer
@@ -192,11 +193,7 @@ object CdcEqDelete {
       |  UNION ALL SELECT 3, cust_id, segment, bal FROM v3)
       |ORDER BY version, cust_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st29_stream_eq_delete" -> st29StreamEqDelete,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st29_stream_eq_delete" -> st29Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st29_stream_eq_delete", st29StreamEqDelete, st29Sql),
   )
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** ST16 — the streaming CDC pipeline: a change stream applied to a keyed
   * snapshot by MERGE (o10's full-outer apply) inside `foreachBatch`,
@@ -156,11 +157,7 @@ object CdcMerge {
       |  ${stageSql("snap1", "chg2")})
       |SELECT cust_id, segment, bal FROM snap2 ORDER BY cust_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st16_streaming_cdc_merge" -> st16StreamingCdcMerge,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st16_streaming_cdc_merge" -> st16Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st16_streaming_cdc_merge", st16StreamingCdcMerge, st16Sql),
   )
 }

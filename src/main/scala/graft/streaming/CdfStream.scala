@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 import graft.queries.Warehouse
+import graft.QueryDef
 
 /** ST26 — STREAMING the change data feed (r18 verdict ask #3; the
   * public Delta CDF-streaming shape): o20 derives the row-level diff
@@ -218,11 +219,7 @@ object CdfStream {
       |${diffSql(3, "v2", "v3")})
       |ORDER BY version, cust_id, change_type""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st26_stream_change_feed" -> st26StreamChangeFeed,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st26_stream_change_feed" -> st26Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st26_stream_change_feed", st26StreamChangeFeed, st26Sql),
   )
 }

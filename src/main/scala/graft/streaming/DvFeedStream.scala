@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 import graft.queries.Warehouse
+import graft.QueryDef
 
 /** ST27 — STREAMING the deletion-vector change feed (the st26×o24
   * composition): st26 streams the o20 snapshot-diff feed, paying two
@@ -178,11 +179,7 @@ object DvFeedStream {
       |  FROM documents WHERE doc_id % 10 <> 3 AND lang = 'de')
       |ORDER BY version, doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st27_stream_dv_feed" -> st27StreamDvFeed,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st27_stream_dv_feed" -> st27Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st27_stream_dv_feed", st27StreamDvFeed, st27Sql),
   )
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** Event-time window aggregations over `events` — the Structured
   * Streaming surface (SURVEY §2.8: the reference's poll-until-stable /
@@ -621,27 +622,15 @@ object EventWindows {
       |  (SELECT max(ts) - INTERVAL 10 minutes FROM events)
       |ORDER BY window_start, event_type""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st17_late_data_drop" -> st17LateDataDrop,
-    "st1_tumbling_window" -> st1Tumbling,
-    "st2_sliding_window" -> st2Sliding,
-    "st5_availablenow_catchup" -> st5AvailableNow,
-    "st8_checkpoint_resume" -> st8CheckpointResume,
-    "st9_commit_protocol" -> st9CommitProtocol,
-    "st14_exactly_once" -> st14ExactlyOnce,
-    "st10_stream_static_enrich" -> st10StreamStaticEnrich,
-    "st13_stream_histogram" -> st13StreamHistogram,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st17_late_data_drop" -> st17Sql,
-    "st1_tumbling_window" -> st1Sql,
-    "st2_sliding_window" -> st2Sql,
-    "st5_availablenow_catchup" -> st5Sql,
-    "st8_checkpoint_resume" -> st8Sql,
-    "st9_commit_protocol" -> st9Sql,
-    "st14_exactly_once" -> st14Sql,
-    "st10_stream_static_enrich" -> st10Sql,
-    "st13_stream_histogram" -> st13Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st17_late_data_drop", st17LateDataDrop, st17Sql),
+    QueryDef("st1_tumbling_window", st1Tumbling, st1Sql),
+    QueryDef("st2_sliding_window", st2Sliding, st2Sql),
+    QueryDef("st5_availablenow_catchup", st5AvailableNow, st5Sql),
+    QueryDef("st8_checkpoint_resume", st8CheckpointResume, st8Sql),
+    QueryDef("st9_commit_protocol", st9CommitProtocol, st9Sql),
+    QueryDef("st14_exactly_once", st14ExactlyOnce, st14Sql),
+    QueryDef("st10_stream_static_enrich", st10StreamStaticEnrich, st10Sql),
+    QueryDef("st13_stream_histogram", st13StreamHistogram, st13Sql),
   )
 }

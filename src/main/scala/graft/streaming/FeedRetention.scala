@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
 import graft.queries.Warehouse
+import graft.QueryDef
 
 /** ST28 — feed consumption ACROSS retention vacuums (round-20 verdict
   * ask #3b, the o26×st27 composition): a CDF consumer's unread tail
@@ -196,11 +197,7 @@ object FeedRetention {
       |  FROM documents WHERE doc_id % 9 <> 4 AND lang = 'fr')
       |ORDER BY version, doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st28_feed_across_vacuum" -> st28FeedAcrossVacuum,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st28_feed_across_vacuum" -> st28Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st28_feed_across_vacuum", st28FeedAcrossVacuum, st28Sql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.Tables._
+import graft.QueryDef
 
 /** ST20 — streaming funnel detection (the CEP/sequence-matching
   * workload class: view → click → purchase per user, each step within
@@ -163,11 +164,7 @@ object FunnelDetect {
       |FROM pcv
       |ORDER BY user_id, purchase_us""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st20_funnel_detect" -> st20FunnelDetect,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st20_funnel_detect" -> st20Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st20_funnel_detect", st20FunnelDetect, st20Sql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.Tables._
+import graft.QueryDef
 
 /** ST19 — streaming silence/gap detection: per user, surface every
   * quiet interval longer than [[GapDetect.gapUs]] between consecutive
@@ -127,11 +128,7 @@ object GapDetect {
       |WHERE prev IS NOT NULL AND tsu - prev > $gapUs
       |ORDER BY user_id, gap_start_us""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st19_gap_detect" -> st19GapDetect,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st19_gap_detect" -> st19Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st19_gap_detect", st19GapDetect, st19Sql),
   )
 }

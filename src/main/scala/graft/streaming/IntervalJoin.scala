@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.QueryDef
 
 /** Stream-stream interval join — the streaming twin of the j2 range
   * join (SURVEY §2.8): purchases join the clicks of the same user that
@@ -556,20 +557,12 @@ object IntervalJoin {
       |FROM j WHERE rn = 1
       |ORDER BY click_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st4_interval_join" -> st4IntervalJoin,
-    "st4s_stream_interval_join" -> st4sStreamIntervalJoin,
-    "st11s_stream_outer_join" -> st11sStreamOuterJoin,
-    "st12s_stream_full_outer" -> st12sStreamFullOuterJoin,
-    "st24_stream_first_touch" -> st24StreamFirstTouch,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st4_interval_join" -> st4Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st4_interval_join", st4IntervalJoin, st4Sql),
     // the streaming run must reproduce the EXACT batch interval join
-    "st4s_stream_interval_join" -> st4Sql,
-    "st11s_stream_outer_join" -> st11Sql,
-    "st12s_stream_full_outer" -> st12Sql,
-    "st24_stream_first_touch" -> st24Sql,
+    QueryDef("st4s_stream_interval_join", st4sStreamIntervalJoin, st4Sql),
+    QueryDef("st11s_stream_outer_join", st11sStreamOuterJoin, st11Sql),
+    QueryDef("st12s_stream_full_outer", st12sStreamFullOuterJoin, st12Sql),
+    QueryDef("st24_stream_first_touch", st24StreamFirstTouch, st24Sql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables._
+import graft.QueryDef
 
 /** Gap-based sessionization over `events` — the custom-state streaming
   * surface (`flatMapGroupsWithState`) with a batch window-function twin
@@ -372,15 +373,9 @@ object Sessionize {
 
   val st15Sql: String = st7Sql
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st3_sessionize" -> st3Sessionize,
-    "st7_stream_sessionize" -> st7StreamSessionize,
-    "st15_session_window" -> st15SessionWindow,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st3_sessionize" -> st3Sql,
-    "st7_stream_sessionize" -> st7Sql,
-    "st15_session_window" -> st15Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st3_sessionize", st3Sessionize, st3Sql),
+    QueryDef("st7_stream_sessionize", st7StreamSessionize, st7Sql),
+    QueryDef("st15_session_window", st15SessionWindow, st15Sql),
   )
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.QueryDef
 
 /** ST21 — streaming benchmark decontamination: c11's exact
   * [[graft.queries.Curation.C11K]]-gram collision gate executed as a
@@ -89,7 +90,7 @@ object StreamDecontam {
     gateRelation(benchGrams, batch)
       .write.mode("append").parquet(sinkDir)
 
-  /** The per-batch gate as a relation (the plan `DumpPlans` renders):
+  /** The per-batch gate as a relation:
     * map-side gram explosion → broadcast bench semi-join → doc-keyed
     * map-side-combinable count. */
   private[graft] def gateRelation(benchGrams: DataFrame,
@@ -109,11 +110,7 @@ object StreamDecontam {
       |FROM tg JOIN bg USING (gram)
       |GROUP BY train_doc ORDER BY train_doc""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st21_stream_decontam" -> st21StreamDecontam,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st21_stream_decontam" -> st21Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st21_stream_decontam", st21StreamDecontam, st21Sql),
   )
 }

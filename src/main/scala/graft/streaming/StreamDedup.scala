@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.QueryDef
 
 /** Streaming exact dedup — the D1 content-hash dedup as a crawl-stream
   * operator, registered under the oracle with a REAL streaming
@@ -77,11 +78,7 @@ object StreamDedup {
       |  SELECT text FROM documents WHERE doc_id % 20 = 0)
       |ORDER BY text_hash""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st6_stream_dedup" -> st6StreamDedup,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st6_stream_dedup" -> st6Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st6_stream_dedup", st6StreamDedup, st6Sql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
+import graft.QueryDef
 
 /** ST23 — the streaming DSIR gate: c13's discriminative importance-
   * weight selection run AS the crawl arrives, completing the streaming
@@ -90,7 +91,7 @@ object StreamDsir {
       batch: DataFrame): Unit =
     gateRelation(m, batch).write.mode("append").parquet(sinkDir)
 
-  /** The per-batch gate as a relation (the plan `DumpPlans` renders):
+  /** The per-batch gate as a relation:
     * map-side feature hash → broadcast weight join → doc-keyed score →
     * frozen-cut label. */
   private[graft] def gateRelation(m: Curation.C13Model,
@@ -166,11 +167,7 @@ object StreamDsir {
       |FROM b ORDER BY doc_id""".stripMargin
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st23_stream_dsir" -> st23StreamDsirGate,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st23_stream_dsir" -> st23Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st23_stream_dsir", st23StreamDsirGate, st23Sql),
   )
 }

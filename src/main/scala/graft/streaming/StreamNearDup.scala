@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.queries.Dedup
+import graft.QueryDef
 
 /** ST18 — streaming NEAR-dup admission against a persisted MinHash
   * index: the d10 incremental-LSH shape executed as a real stream. A
@@ -109,11 +110,7 @@ object StreamNearDup {
       .write.mode("append").parquet(s"$indexRoot/bands")
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st18_stream_neardup" -> st18StreamNearDup,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st18_stream_neardup" -> Dedup.st18Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st18_stream_neardup", st18StreamNearDup, Dedup.st18Sql),
   )
 }

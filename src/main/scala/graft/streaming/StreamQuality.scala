@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables._
+import graft.QueryDef
 
 /** ST22 — the streaming quality gate: t15's FROZEN-reference CCNet
   * scoring run AS the crawl arrives (the r16 verdict ask #7 — the
@@ -97,7 +98,7 @@ object StreamQuality {
     gateRelation(cab, ca, v, qmin, width, cut1, cut2, batch)
       .write.mode("append").parquet(sinkDir)
 
-  /** The per-batch gate as a relation (the plan `DumpPlans` renders):
+  /** The per-batch gate as a relation:
     * batch-local tokenize + lag window, two broadcast model joins,
     * doc-keyed aggregation, frozen-cut labeling. */
   private[graft] def gateRelation(cab: DataFrame, ca: DataFrame, v: Long,
@@ -176,11 +177,7 @@ object StreamQuality {
       |FROM b ORDER BY doc_id""".stripMargin
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st22_stream_quality" -> st22StreamQualityGate,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st22_stream_quality" -> st22Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("st22_stream_quality", st22StreamQualityGate, st22Sql),
   )
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool for the optimization rounds: write the `explain("formatted")`
   * plan of each named registered query to `<outDir>/<name>_<tag>.txt`.
@@ -12,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * public plan at a localCheckpoint scan; the file still pins the final
   * frame's shape, and OPTIMIZATION_r*.md carries the mechanism-stage
   * excerpts for those. Not part of the driver contract — local tooling
-  * like [[DumpPlans]]/[[Profile]].
+  * like [[Profile]].
   */
 object DumpQueryPlans {
   def main(args: Array[String]): Unit = {
@@ -20,14 +19,7 @@ object DumpQueryPlans {
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val plan = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,34 +1,25 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling harness: time named `SparkEntry.queries` repeatedly and
   * optionally dump the formatted physical plan.
   *
   * Usage: `runMain graft.tools.Profile <sfDir> <reps> <name>[,<name>...]`
   * (reps 0 → just print the plan). Not part of the driver contract —
-  * local iteration tooling only, like [[DumpPlans]].
+  * local iteration tooling only, like [[DumpQueryPlans]].
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args(2).split(",").map(_.trim).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
     // A/B knobs for optimization experiments, e.g.
-    // GRAFT_PROFILE_CONF="spark.foo=1;spark.bar=2"
-    sys.env.get("GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => () // tolerate empty/malformed entries (e.g. CONF="")
+    // GRAFT_PROFILE_CONF="spark.foo=1;spark.bar=2"; empty or malformed
+    // entries (e.g. CONF="") are skipped
+    val conf = sys.env.get("GRAFT_PROFILE_CONF").toSeq
+      .flatMap(_.split(";")).map(_.split("=", 2)).collect {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
       }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(conf: _*)
     // GRAFT_PROFILE_JOBS=1: print one line per Spark job (duration +
     // call site) so an operator's per-action cost is visible without
     // the UI — dev-only, like the rest of this tool.

@@ -22,16 +22,24 @@ import graft.validate.Validate
 object ReplayPipeline {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/replay_out")
+    val spark = graft.GraftSession.local()
+    val ledger = run(spark, outDir, "src/test/resources/fixtures")
+    println(s"replay complete: ${ledger.map { case (s, st) => s"$s=$st" }.mkString(", ")}")
+    spark.stop()
+    if (failed(ledger)) sys.exit(1)
+  }
+
+  /** True when any step of a replay ledger reported `error`. */
+  def failed(ledger: Seq[(String, String)]): Boolean =
+    ledger.exists(_._2 == "error")
+
+  /** Replay every lifecycle over the fixtures in `fixtures`, writing under
+    * `outDir`; returns the (step, "done" | "error") ledger in step order.
+    * A failing step is logged and recorded, and the later steps still run.
+    */
+  def run(spark: SparkSession, outDir: String,
+      fixtures: String): Seq[(String, String)] = {
     val runTs = sys.env.getOrElse("GRAFT_RUN_TS", "2026-01-01T00:00:00")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fixtures = "src/test/resources/fixtures"
     val ledger = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
 
     def step(name: String)(body: => Unit): Unit =
@@ -85,7 +93,6 @@ object ReplayPipeline {
         ledger.toSeq.toDF("step", "status"), "status", s"$outDir/summary")
     }
 
-    println(s"replay complete: ${ledger.map { case (s, st) => s"$s=$st" }.mkString(", ")}")
-    spark.stop()
+    ledger.toSeq
   }
 }

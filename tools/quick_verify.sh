@@ -6,7 +6,7 @@ set -e
 SF="$1"; ONLY="$2"; OUT="${3:-/tmp/qv_$(echo "$2" | tr ',' '_' | cut -c1-40)}"
 ADDOPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 rm -rf "$OUT"
-GRAFT_VERIFY_ONLY="$ONLY" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
+SPARK_GRAFT_ONLY="$ONLY" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
   java $ADDOPENS -Xmx16g -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
